@@ -107,10 +107,7 @@ def main(argv: list[str] | None = None) -> int:
             path = tx.generate_manifest(args.table, args.version)
             print(f"manifest at {path}")
         elif args.tx_cmd == "bloom":
-            # converged by table size: JSON sidecar while small, the
-            # parquet-table index once the bitmap words would weigh
-            # on the driver (warehouse_tx.build_bloom_index_auto)
-            path = tx.build_bloom_index_auto(
+            path = tx.build_bloom_index_table(
                 spark, args.table, args.column, args.version
             )
             print(f"bloom index at {path}")

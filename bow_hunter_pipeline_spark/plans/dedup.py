@@ -92,13 +92,24 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-call path). Unresolved expressions are immutable; analysis
 # assigns fresh ids per plan, so sharing one tree across DataFrames,
 # threads, and sessions in this process is safe by construction.
-_MINHASH_EXPRS: dict[str, object] = {}
+class _ExprMemo:
+    """Holds the memo behind an OPAQUE object, as legtime's
+    accumulator does: tools/plan_fingerprints.py hashes module-level
+    dicts BY VALUE, so a bare dict warmed by an earlier query made
+    every consumer's fingerprint depend on test order. An instance is
+    tokenized by type only."""
+
+    def __init__(self) -> None:
+        self.exprs: dict[str, object] = {}
+
+
+_MINHASH_EXPRS = _ExprMemo()
 
 
 def _sig_exprs() -> tuple:
     """(th, h, [m0..m{NUM_PERM-1}]) signature Column trees, built once
     per process (see _MINHASH_EXPRS)."""
-    if "sig" not in _MINHASH_EXPRS:
+    if "sig" not in _MINHASH_EXPRS.exprs:
         th = token_hash_array("text").alias("th")
         h = F.explode_outer(shingle_hashes_from(F.col("th"))).alias("h")
         mins = [
@@ -108,8 +119,8 @@ def _sig_exprs() -> tuple:
             ).alias(f"m{p}")
             for p in range(NUM_PERM)
         ]
-        _MINHASH_EXPRS["sig"] = (th, h, mins)
-    return _MINHASH_EXPRS["sig"]
+        _MINHASH_EXPRS.exprs["sig"] = (th, h, mins)
+    return _MINHASH_EXPRS.exprs["sig"]
 
 
 def _minhash_sigs(docs: DataFrame) -> DataFrame:
@@ -132,7 +143,7 @@ def _minhash_sigs(docs: DataFrame) -> DataFrame:
 def _band_key_expr():
     """The exploded LSH band-key Column tree, built once per process
     (see _MINHASH_EXPRS)."""
-    if "band" not in _MINHASH_EXPRS:
+    if "band" not in _MINHASH_EXPRS.exprs:
         band_cols = [
             F.md5(
                 F.concat_ws(
@@ -146,10 +157,10 @@ def _band_key_expr():
             )
             for b in range(BANDS)
         ]
-        _MINHASH_EXPRS["band"] = F.explode(F.array(*band_cols)).alias(
-            "band_key"
-        )
-    return _MINHASH_EXPRS["band"]
+        _MINHASH_EXPRS.exprs["band"] = F.explode(
+            F.array(*band_cols)
+        ).alias("band_key")
+    return _MINHASH_EXPRS.exprs["band"]
 
 
 def _minhash_buckets(docs: DataFrame) -> DataFrame:

@@ -1804,7 +1804,7 @@ def tx_bloom_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderpriority"
     ).repartition(8)
     tx.create_table(spark, TX_BLOOM_PATH, base)
-    index = tx.build_bloom_index(spark, TX_BLOOM_PATH, "o_orderkey")
+    index = tx.build_bloom_index_table(spark, TX_BLOOM_PATH, "o_orderkey")
 
     lo, hi = orders.agg(
         F.min("o_orderkey"), F.max("o_orderkey")
@@ -2087,29 +2087,39 @@ def tx_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 TX_DFMERGE_PATH = "/tmp/bhps_tx_dfmerge"
 
 
-def tx_df_planned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2+: the MERGE find phase AS A DATAFRAME — candidate selection
-    runs over a parquet ACTIONS CHECKPOINT of the commit log
-    (``warehouse_tx.write_actions_checkpoint``) instead of a
-    driver-side per-file loop: the stats intersection is a
-    filter + anti-join, the bloom stage joins the probe-hit frame,
-    and the driver first touches per-file state when it collects the
-    final O(candidates) rewrite list — the list the merge must read
-    anyway. This is the posture that survives 10⁷ files, where the
-    Python per-file loop (fine at 10⁵) becomes the planner
-    bottleneck (VERDICT r09 watch-item a).
+def _bloom_merge_pruned(
+    spark: SparkSession,
+    table: str,
+    updates: DataFrame,
+    keys: list[str],
+    update_cols: list[str],
+    index: str,
+) -> tuple[int, int]:
+    """``warehouse_tx.merge_pruned`` through a bloom index, plus the
+    number of files the stats stage alone keeps on the same snapshot:
+    ``(n_rewritten, n_stats_survivors)``, the pair the bloom-merge
+    queries assert on (the probe must tighten the rewrite set)."""
+    from bow_hunter_pipeline_spark import warehouse_tx as tx
 
-    The PLANNER-EQUIVALENCE law — on the same snapshot, bounds, and
-    bloom index, the DataFrame planner's (rewrite, carry,
-    stats-survivors) must equal the driver-loop planner's
-    set-for-set; pruning strategy can never change answers, only
-    cost — is a PROOF LEG behind ``legtime.proofs_enabled()``:
-    pytest runs it with ``BHPS_PROOF_LEGS=1``
-    (tests/test_proof_legs.py), while driver/bench runs execute the
-    production shape a user pays for (VERDICT r11 ask #4). Then the
-    DF-planned merge commits: bump the MAX composite key's quantity
-    and insert a ``(-2, 1)`` row. Oracle: the merge replayed
-    relationally over lineitem.
+    read_v = tx._versions(table)[-1]
+    _, _, n_stats = tx._merge_find(spark, table, updates, keys, read_v)
+    _, n_rw, _ = tx.merge_pruned(
+        spark, table, updates, keys, update_cols, bloom_index=index
+    )
+    return n_rw, n_stats
+
+
+def tx_df_planned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E2+: the bloom-pruned MERGE on the MAX composite key — the
+    twin of ``tx_composite_pruned_merge`` at the other end of the
+    key space. The table keys on ``(l_orderkey, l_linenumber)`` and
+    lands hash-distributed, so the stats stage of
+    ``warehouse_tx.merge_pruned``'s find phase keeps every file and
+    only the composite-key bloom probe prunes; the in-query assertion
+    pins that strictly fewer files rewrite than the stats stage keeps.
+    The merge bumps the MAX composite key's quantity and inserts a
+    ``(-2, 1)`` row. Oracle: the merge replayed relationally over
+    lineitem.
     """
     from bow_hunter_pipeline_spark import warehouse_tx as tx
     from bow_hunter_pipeline_spark.functions.exact import dsum
@@ -2155,42 +2165,8 @@ def tx_df_planned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, rows, "l_orderkey bigint, l_linenumber int, l_quantity double"
     )
 
-    # the actions checkpoint is the DF planner's input — a real
-    # pipeline maintains it incrementally, so it's a build-leg cost
-    with legtime.leg("build"):
-        read_v = tx._versions(TX_DFMERGE_PATH)[-1]
-        actions = tx.write_actions_checkpoint(
-            spark, TX_DFMERGE_PATH, read_v
-        )
-
-    # PROOF LEG (pytest-only — legtime.proofs_enabled): planner
-    # equivalence, DataFrame find == driver-loop find. A production
-    # merge runs ONE planner; benching this replay hid the real
-    # build/serve split (VERDICT r11 ask #4). tests/test_proof_legs.py
-    # runs it with BHPS_PROOF_LEGS=1 so a violated law still fails CI.
-    if legtime.proofs_enabled():
-        b = tx._updates_key_bounds(updates, keys)
-        rels, logged = tx._replay(TX_DFMERGE_PATH, read_v)
-        lp_rw, lp_carry, lp_stats = tx._composite_find_loop(
-            spark, TX_DFMERGE_PATH, updates, keys, b, rels, logged,
-            read_v, index,
-        )
-        df_rw, df_carry, df_stats = tx._composite_find_df(
-            spark, TX_DFMERGE_PATH, updates, keys, b, read_v, index,
-            actions_path=actions,
-        )
-        # driver-held state is O(candidates): the carry set comes back
-        # BY REFERENCE (a lazy anti-join plan, not a Python list) —
-        # only this proof leg ever materializes its names
-        assert isinstance(df_carry, DataFrame), type(df_carry)
-        assert set(df_rw) == set(lp_rw), (df_rw, lp_rw)
-        carried = {r.file for r in df_carry.collect()}
-        assert carried == set(lp_carry), (carried, lp_carry)
-        assert df_stats == lp_stats, (df_stats, lp_stats)
-
-    _, n_rw, _, n_stats = tx.merge_pruned_composite_df(
-        spark, TX_DFMERGE_PATH, updates, keys, ["l_quantity"],
-        bloom_index=index, actions_path=actions,
+    n_rw, n_stats = _bloom_merge_pruned(
+        spark, TX_DFMERGE_PATH, updates, keys, ["l_quantity"], index
     )
     assert n_rw <= n_stats
     if head:  # non-empty fixture: bloom must BEAT the stats pruner
@@ -2484,11 +2460,11 @@ def tx_composite_pruned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4-column ``(state, species, year, unit)`` PK,
     load_population_production.sql:30), landed hash-distributed so
     EVERY file spans both columns' full ranges: the per-column stats
-    intersection (``merge_pruned``'s whole arsenal) keeps all 8 files,
-    and only the composite-key bloom probe — the updates' key TUPLES
-    hashed as one unit — prunes the rewrite set. The in-query
-    assertion pins exactly that: strictly fewer files rewrite than the
-    stats-only find phase would (the returned ``n_stats_survivors``).
+    intersection keeps all 8 files, and only the composite-key bloom
+    probe — the updates' key TUPLES hashed as one unit — prunes the
+    rewrite set. The in-query assertion pins exactly that: strictly
+    fewer files rewrite than the stats stage of the same find phase
+    keeps (:func:`_bloom_merge_pruned`).
 
     Updates: bump the minimum composite key's quantity (+100,
     binary-exact) and insert a new ``(-1, 1)`` row — one matched
@@ -2550,13 +2526,13 @@ def tx_composite_pruned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = local_df(
         spark, rows, "l_orderkey bigint, l_linenumber int, l_quantity double"
     )
-    _, n_rw, _, n_stats = tx.merge_pruned_composite(
+    n_rw, n_stats = _bloom_merge_pruned(
         spark,
         TX_CMERGE_PATH,
         updates,
         ["l_orderkey", "l_linenumber"],
         ["l_quantity"],
-        bloom_index=index,
+        index,
     )
     assert n_rw <= n_stats
     if head:  # non-empty fixture: bloom must BEAT the stats pruner

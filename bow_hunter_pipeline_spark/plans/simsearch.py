@@ -1597,8 +1597,15 @@ def _cent_array_lit_sql(cent_rows) -> str:
 # centroid set 4x per query (per arrival batch + per probe side). An
 # expression tree carries no session or data state — one construction
 # serves every DataFrame (guide §4/§5). Keyed by VALUE, so a retrained
-# centroid set gets its own entry.
-_CELL_EXPR_CACHE: dict[str, Column] = {}
+# centroid set gets its own entry. Held behind an OPAQUE object for
+# the reason given at dedup._ExprMemo: a bare module dict is hashed by
+# value into the plan fingerprints, so warming it changed them.
+class _ExprMemo:
+    def __init__(self) -> None:
+        self.exprs: dict[str, Column] = {}
+
+
+_CELL_EXPR_CACHE = _ExprMemo()
 
 
 def _cell_id_expr(cent_rows) -> Column:
@@ -1607,7 +1614,7 @@ def _cell_id_expr(cent_rows) -> Column:
     construction serves every DataFrame (see _ivf_cell_assign),
     memoized per centroid set (see _CELL_EXPR_CACHE)."""
     lit = _cent_array_lit_sql(cent_rows)
-    if lit not in _CELL_EXPR_CACHE:
+    if lit not in _CELL_EXPR_CACHE.exprs:
         scored = F.transform(
             F.expr(lit),
             lambda c: F.struct(
@@ -1618,10 +1625,10 @@ def _cell_id_expr(cent_rows) -> Column:
                 c["nc"].alias("nc"),
             ),
         )
-        _CELL_EXPR_CACHE[lit] = (
+        _CELL_EXPR_CACHE.exprs[lit] = (
             (-F.array_max(scored)["nc"]).cast("bigint").alias("cell_id")
         )
-    return _CELL_EXPR_CACHE[lit]
+    return _CELL_EXPR_CACHE.exprs[lit]
 
 
 def _ivf_cell_assign(

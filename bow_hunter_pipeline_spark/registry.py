@@ -47,7 +47,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # tests/test_plan_fingerprints.py forces those queries into the
 # driver-checked prefix — the mechanical form of the rotation rule
 # "changed plan ⇒ re-proof" (VERDICT r09, What's-missing #1).
-ROUND = 15
+ROUND = 16
 
 # --- oracle SQL fragments (DuckDB dialect = ANSI here) -----------------
 
@@ -1819,22 +1819,21 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # listed follows in registry order — nothing is ever dropped, only
 # reordered.
 _DRIVER_ROTATION = [
-    # --- round-15 prefix (second optimization round). EVERY
-    # r15-stamped changed plan, grouped by the change that drifted it:
-    # the CC-loop rework (Observation convergence + pointer jumping in
-    # _min_label_propagate — drifts every cluster builder), the
-    # MinHash expression-tree memo (plans/dedup._MINHASH_EXPRS —
-    # drifts every LSH/signature consumer), and the input-skew spread
-    # guards (g3 keyed, b3 stage spread, h3 bigram / h6 curation
-    # round-robin). Remaining slots carry the r05/r06 age re-check
-    # queue deferred from r14. Nothing is ever dropped, only
+    # --- round-16 prefix. EVERY r16-stamped changed plan, grouped by
+    # the change that drifted it: the MERGE find phase folded into
+    # warehouse_tx.merge_pruned and the JSON bloom sidecar retired
+    # (every merge / bloom consumer), and the two expression memos
+    # moved behind opaque holders (every MinHash and IVF consumer).
+    # The round-15 prefix follows; nothing is ever dropped, only
     # reordered.
-    # --- CC-loop rework (dedup._min_label_propagate) ---
-    "g5_dbscan_clusters",
-    "h1_dedup_clusters",
-    "h1_incremental_dedup_clusters",
-    "h6_leakage_safe_split",
-    # --- MinHash/LSH expression memo (plans/dedup) ---
+    # --- one MERGE find phase, one bloom sidecar (warehouse_tx) ---
+    "e2_tx_merge_pruned",
+    "e2_tx_composite_pruned_merge",
+    "e2_tx_df_planned_merge",
+    "e2_tx_bloom_pruned_lookup",
+    "e2_tx_bloom_table_lookup",
+    "e2_tx_incremental_bloom_index",
+    # --- MinHash memo holder (plans/dedup._MINHASH_EXPRS) ---
     "h1_minhash_lsh_pairs",
     "h1_minhash_error_audit",
     "h1_bucketed_lsh_pairs",
@@ -1844,12 +1843,14 @@ _DRIVER_ROTATION = [
     "h1_lsh_compacted_index",
     "h1_cc_alternating_star",
     "h1_edit_distance_pairs",
+    "h1_dedup_clusters",
+    "h1_incremental_dedup_clusters",
     "h6_corpus_release_pipeline",
+    "h6_curation_pipeline",
     "h6_dedup_apply",
+    "h6_leakage_safe_split",
     "h6_minhash_decontaminate",
-    # --- IVF rework: _ivf_assign unified onto the map-side
-    # _ivf_cell_assign form; nprobe probe side map-side; the
-    # _cell_id_expr split + per-batch lander expression cache ---
+    # --- IVF cell-expression memo holder (plans/simsearch) ---
     "h2_ivf_topk",
     "h2_ivf_pq_topk",
     "h2_filtered_ivf_topk",
@@ -1860,12 +1861,15 @@ _DRIVER_ROTATION = [
     "h2_ivf_recluster_moves",
     "h2_ivf_stream_compacted_search",
     "h2_ivf_streaming_maintenance",
+    # --- round-15 prefix (second optimization round): the r15
+    # changed plans not already listed above, then the r05/r06 age
+    # re-check queue. ---
+    # --- CC-loop rework (dedup._min_label_propagate) ---
+    "g5_dbscan_clusters",
     # --- delete_where_dv find-scan fold (one localCheckpoint pass;
     # drifts every dv consumer incl. the h4_streaming_cdf family) ---
     "e2_tx_dv_delete",
     "e2_tx_dv_purge",
-    "e2_tx_incremental_bloom_index",
-    "e2_tx_bloom_table_lookup",
     "h4_streaming_cdc_stateful",
     "h4_streaming_cdf_apply",
     "h4_streaming_cdf_change_files",
@@ -1873,7 +1877,6 @@ _DRIVER_ROTATION = [
     # --- input-skew spread guards (guide §2.5) ---
     "g3_top_k_per_group",
     "h3_bigram_counts",
-    "h6_curation_pipeline",
     "b3_d1_d2_population_explode",
     "ep3_flagship_pipeline",
     # --- r05/r06 age re-check queue (deferred from r14): changed
@@ -1896,7 +1899,7 @@ PENDING_DRIVER_QUEUE = [
 # a slot; prefix membership of every changed plan is enforced by
 # tests/test_plan_fingerprints.py). Reset each round.
 NEW_IN_PREFIX = [
-    # r15 adds no queries (optimization round)
+    # r16 adds no queries
 ]
 
 

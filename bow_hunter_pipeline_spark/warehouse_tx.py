@@ -1510,174 +1510,95 @@ def merge_pruned(
     updates: DataFrame,
     keys: list[str],
     update_cols: list[str],
+    bloom_index: str | None = None,
 ) -> tuple[int, int, int]:
     """MERGE with file pruning — the scale refinement the plain merge
-    documents: only data files whose [min, max] range of the FIRST
-    merge key intersects the updates' key range are rewritten;
-    everything else carries over untouched in the commit. This is the
-    Delta/Iceberg data-skipping rewrite, driven by the add-action
-    stats recorded in the commit log at write time — reading the
-    (tiny) log, not one footer per live file. Files from legacy
-    commits without logged stats fall back to a one-time footer read;
-    files with no stats at all are conservatively rewritten.
-
-    Pruning is gated to INTEGRAL merge keys: string footer statistics
-    can be truncated by exotic writers (max not exact), which would
-    make skipping unsafe. Non-integral keys take the full-rewrite
-    path — correct, just unpruned.
-
-    Returns (new_version, n_rewritten_files, n_carried_files).
-    Correctness: a key outside a file's min/max cannot be in the file,
-    so carried files can contain no matched rows; updates whose keys
-    miss every file are inserts and land in the rewritten output.
-    An EMPTY updates frame is a no-op: the current version is returned
-    unchanged (no zero-row file, no log growth).
-    """
-    key = keys[0]
-    # one 2-value scalar aggregate — not a hot-path collect
-    bounds = updates.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).collect()[0]
-    lo, hi = bounds.lo, bounds.hi
-
-    # OCC: pin the read version; the commit targets read_v + 1 so an
-    # interleaved writer forces a conflict instead of being erased
-    read_v = _versions(table)[-1]
-    rels, logged = _replay(table, read_v)
-    if lo is None:  # empty updates: nothing to merge, nothing to write
-        return read_v, 0, len(rels)
-
-    prunable = isinstance(updates.schema[key].dataType, _INTEGRAL_TYPES)
-    p_key = _physical_name(table, key, read_v)  # stats are at-rest names
-    rewrite, carry = [], []
-    for rel in rels:
-        if not prunable:
-            rewrite.append(rel)
-            continue
-        if rel in logged and p_key in logged[rel]:
-            f_lo, f_hi = logged[rel][p_key]
-        else:  # legacy commit without stats: one-time footer read
-            f_lo, f_hi = _file_key_stats(spark, table, rel, p_key)
-        if f_lo is None:  # no stats anywhere: conservatively rewrite
-            rewrite.append(rel)
-        elif f_hi >= lo and f_lo <= hi:  # ranges intersect: may match
-            rewrite.append(rel)
-        else:  # disjoint ranges: no row in this file can match
-            carry.append(rel)
-
-    if rewrite:
-        touched = _read_live(
-            spark, table, rewrite, _replay_dvs(table, read_v),
-            schema=table_schema(table, read_v),
-        )
-    else:
-        touched = snapshot(spark, table, read_v).limit(0)
-    merged = upsert(touched, updates, keys, update_cols)
-    next_v = read_v + 1
-    new_files, stats = _write_data(merged, table, next_v, keys)
-    try:
-        _commit(
-            table, next_v, add=new_files, remove=rewrite, stats=stats,
-            op="MERGE_PRUNED",
-        )
-    except RuntimeError:
-        _discard_uncommitted(table, new_files)
-        raise
-    return next_v, len(rewrite), len(carry)
-
-
-def merge_pruned_composite(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    update_cols: list[str],
-    bloom_index: str | None = None,
-) -> tuple[int, int, int, int]:
-    """MERGE with a COMPOSITE-KEY find phase — :func:`merge_pruned`
-    prunes on the FIRST key's range only; real CDC merges key on
-    composites (the reference's PK is ``(state, species, year,
-    unit)``, load_population_production.sql:30), where two pruners
-    compose:
+    documents: only data files that may hold a matched row are
+    rewritten; everything else carries over untouched in the commit.
+    This is the Delta/Iceberg data-skipping rewrite, driven by the
+    add-action stats recorded in the commit log at write time —
+    reading the (tiny) log, not one footer per live file. The find
+    phase (:func:`_merge_find`) composes two pruners:
 
     1. Per-column stats intersection over EVERY integral merge key —
        sound because a matching row must equal an update on ALL key
        columns, so ONE disjoint column range already proves a file
-       clean.
-    2. A composite-key BLOOM probe (``bloom_index`` from
+       clean. A 1-key merge is simply the 1-column case.
+    2. An optional composite-key BLOOM probe (``bloom_index`` from
        :func:`build_bloom_index_table` over the same key list) over
        the stats survivors — the point-set discriminator range stats
        cannot be: on a hash-distributed layout every file spans every
        column's full range, yet almost no file holds the probed key
-       TUPLES. Probe keys come straight from the updates batch as a
-       DataFrame (never a driver list); files the index does not
-       cover (appended after the build) stay candidates.
+       TUPLES. Files the index does not cover stay candidates.
 
-    No false negatives anywhere, so carried files provably hold no
-    matched row; update rows whose keys miss every file are inserts
-    and land in the rewritten output. Empty updates are a no-op.
+    Pruning is gated to INTEGRAL merge keys: string footer statistics
+    can be truncated by exotic writers (max not exact), which would
+    make skipping unsafe. Non-integral keys never prune — correct,
+    just unpruned.
 
-    Returns ``(new_version, n_rewritten, n_carried,
-    n_stats_survivors)`` — the last is what the single-pruner find
-    phase would rewrite, so callers can assert the bloom stage
-    actually tightened the set.
+    Returns (new_version, n_rewritten_files, n_carried_files).
+    Correctness: no pruner has false negatives, so carried files can
+    contain no matched rows; updates whose keys miss every file are
+    inserts and land in the rewritten output. An EMPTY updates frame
+    is a no-op: the current version is returned unchanged (no
+    zero-row file, no log growth).
     """
-    b = _updates_key_bounds(updates, keys)
+    # OCC: pin the read version; the commit targets read_v + 1 so an
+    # interleaved writer forces a conflict instead of being erased
     read_v = _versions(table)[-1]
-    rels, logged = _replay(table, read_v)
-    if all(b[f"__lo_{k}"] is None for k in keys):  # empty updates
-        return read_v, 0, len(rels), 0
-    rewrite, carry, n_stats = _composite_find_loop(
-        spark, table, updates, keys, b, rels, logged, read_v, bloom_index
-    )
+    found = _merge_find(spark, table, updates, keys, read_v, bloom_index)
+    if found is None:  # empty updates: nothing to merge, nothing to write
+        return read_v, 0, len(live_files(table, read_v))
+    rewrite, carry, _ = found
     next_v = _merge_rewrite_commit(
         spark, table, rewrite, updates, keys, update_cols, read_v,
-        "MERGE_PRUNED_COMPOSITE",
+        "MERGE_PRUNED",
     )
-    return next_v, len(rewrite), len(carry), n_stats
+    return next_v, len(rewrite), len(carry)
 
 
-def _updates_key_bounds(updates: DataFrame, keys: list[str]):
-    """One bounded scalar row: per-key lo/hi of the updates batch."""
-    aggs = []
-    for k in keys:
-        aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-    return updates.agg(*aggs).collect()[0]
-
-
-def _composite_find_loop(
+def _merge_find(
     spark: SparkSession,
     table: str,
     updates: DataFrame,
     keys: list[str],
-    b,
-    rels: list[str],
-    logged: dict,
     read_v: int,
-    bloom_index: str | None,
-) -> tuple[list[str], list[str], int]:
-    """The DRIVER-LOOP find phase (stats intersection, then bloom):
-    fine to ~10⁵ files, O(files) Python-side past that. Its
-    DataFrame twin :func:`_composite_find_df` computes the same sets
-    executor-side from an actions checkpoint; the two planners are
-    equivalence-asserted in-query (e2_tx_df_planned_merge)."""
+    bloom_index: str | None = None,
+) -> tuple[list[str], list[str], int] | None:
+    """The MERGE find phase at ``read_v``: ``(rewrite, carry,
+    n_stats_survivors)`` — the last is what the stats stage alone
+    would rewrite, so callers can assert the bloom stage tightened
+    the set — or None when ``updates`` holds no key. One bounded
+    scalar job (per-key bounds of the updates), then a driver loop
+    over the replayed add-action stats; files from legacy commits
+    without logged stats fall back to a one-time footer read."""
+    aggs = []
+    for k in keys:
+        aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
+    b = updates.agg(*aggs).collect()[0]
+    if all(b[f"__lo_{k}"] is None for k in keys):
+        return None
+    rels, logged = _replay(table, read_v)
+    # stats are keyed by at-rest names; resolve the mapping ONCE (each
+    # _column_mapping call re-reads every log entry)
+    inv = {l: p for p, l in _column_mapping(table, read_v).items()}
     prunable = [
-        k
+        (inv.get(k, k), b[f"__lo_{k}"], b[f"__hi_{k}"])
         for k in keys
         if isinstance(updates.schema[k].dataType, _INTEGRAL_TYPES)
+        and b[f"__lo_{k}"] is not None
     ]
     survivors, carry = [], []
     for rel in rels:
         clean = False
-        for k in prunable:
-            pk = _physical_name(table, k, read_v)
+        for pk, lo, hi in prunable:
             if rel in logged and pk in logged[rel]:
                 f_lo, f_hi = logged[rel][pk]
             else:  # legacy commit without stats: one-time footer read
                 f_lo, f_hi = _file_key_stats(spark, table, rel, pk)
             if f_lo is None:
                 continue  # no stats on this column: can't prove clean
-            if f_hi < b[f"__lo_{k}"] or f_lo > b[f"__hi_{k}"]:
+            if f_hi < lo or f_lo > hi:
                 clean = True  # one disjoint key column proves it
                 break
         (carry if clean else survivors).append(rel)
@@ -1725,260 +1646,6 @@ def _merge_rewrite_commit(
         _discard_uncommitted(table, new_files)
         raise
     return next_v
-
-
-_ACTIONS_DIR = "_actions"
-
-
-def write_actions_checkpoint(
-    spark: SparkSession, table: str, version: int | None = None
-) -> str:
-    """Materialize the replayed table state — live files plus their
-    logged per-column integral min/max — as a PARQUET checkpoint
-    (Delta paper §3.2: the log's answer to unbounded replay, here
-    extended to the FIND PHASE: planners read this frame
-    executor-side instead of looping driver-held dicts, so candidate
-    selection scales past 10⁷ files where the per-file Python loop
-    becomes the bottleneck — VERDICT r09 watch-item (a)). Schema:
-    ``(file, col, lo, hi)``; every live file gets a ``col IS NULL``
-    existence row, so the frame alone reconstructs the live set.
-    The write itself is driver-O(files) once per version — the same
-    cost the JSON checkpoint already pays — and every subsequent
-    find phase is distributed. The rows are driver-held already, so
-    the parquet is written DIRECTLY via Arrow (one atomic rename, no
-    Spark job): routing them through ``createDataFrame(list)`` +
-    ``coalesce`` re-enters a Python worker once per parallelism slice
-    (~5.5 s of pure boundary overhead per checkpoint at local[32] —
-    optimization guide §4)."""
-    if version is None:
-        version = _versions(table)[-1]
-    rels, logged = _replay(table, version)
-    # integral columns of the snapshot schema, by PHYSICAL name — the
-    # footer fallback below reads these for stat-less legacy files
-    integral_cols = [
-        _physical_name(table, f.name, version)
-        for f in table_schema(table, version).fields
-        if isinstance(f.dataType, _INTEGRAL_TYPES)
-    ]
-    rows: list[tuple] = [(r, None, None, None) for r in rels]
-    for rel in rels:
-        file_stats = {
-            col: (lo, hi)
-            for col, (lo, hi) in sorted(logged.get(rel, {}).items())
-            if isinstance(lo, int) and not isinstance(lo, bool)
-        }
-        missing = [c for c in integral_cols if c not in file_stats]
-        if missing:
-            # PER-COLUMN footer fallback, matching the loop planner's
-            # `pk in logged[rel]` granularity exactly: a file with
-            # PARTIAL logged stats (stats_cols narrower than the
-            # merge keys) still footer-reads the missing columns, or
-            # the two planners diverge on it (loop proves it clean on
-            # an unlogged column, DF keeps it a candidate) and the
-            # in-plan set-for-set equivalence assert fails. Cost: ONE
-            # footer read per file per checkpoint write, only for
-            # files whose logged stats don't already cover every
-            # integral column — zero on tables whose stats_cols span
-            # the schema's integral columns.
-            footer = _footer_stats(os.path.join(table, rel), missing)
-            for col, (lo, hi) in sorted(footer.items()):
-                if isinstance(lo, int) and not isinstance(lo, bool):
-                    file_stats[col] = (lo, hi)
-        for col, (lo, hi) in file_stats.items():
-            rows.append((rel, col, int(lo), int(hi)))
-    out_dir = os.path.join(table, _ACTIONS_DIR)
-    os.makedirs(out_dir, exist_ok=True)
-    final = os.path.join(out_dir, f"actions-v{version:08d}.parquet")
-    tmp = final + f".{uuid.uuid4().hex}.tmp"
-    write_parquet_rows(
-        rows, "file string, col string, lo bigint, hi bigint", tmp
-    )
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    elif os.path.exists(final):
-        os.unlink(final)
-    os.replace(tmp, final)
-    return final
-
-
-def _composite_find_df(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    b,
-    read_v: int,
-    bloom_index: str | None,
-    actions_path: str | None = None,
-) -> tuple[list[str], DataFrame, int]:
-    """:func:`_composite_find_loop` AS A DATAFRAME over the actions
-    checkpoint: the stats intersection is a filter+anti-join, the
-    bloom stage joins the probe-hit frame — nothing per-file touches
-    the driver until the final O(candidates) collect of the rewrite
-    LIST (bounded by what the merge must read anyway). The CARRY set
-    is returned BY REFERENCE — a lazy single-column ``file``
-    DataFrame (live files anti-joined against the rewrite set) — so
-    driver-held state stays O(candidates) even at 10⁷ live files;
-    callers that need the names (the equivalence proof, fixture-scale
-    tests) collect it themselves. Files without stats for a key stay
-    candidates (only a logged disjoint range proves clean), and files
-    absent from the bloom index stay candidates — both laws inherited
-    from the loop planner, which this must match set-for-set
-    (asserted in e2_tx_df_planned_merge).
-
-    A caller-supplied ``actions_path`` must checkpoint EXACTLY
-    ``read_v`` (the version is parsed from the ``actions-vNNNNNNNN``
-    name): a checkpoint older than the snapshot would silently miss
-    files added by intervening commits — matched rows in them would
-    neither rewrite nor carry.
-    """
-    if actions_path is None:
-        actions_path = write_actions_checkpoint(spark, table, read_v)
-    else:
-        m = re.search(r"actions-v(\d{8})", os.path.basename(actions_path))
-        ck_v = int(m.group(1)) if m else None
-        if ck_v != read_v:
-            raise RuntimeError(
-                f"actions checkpoint is for version {ck_v}, but the "
-                f"merge reads version {read_v}: the table advanced "
-                "after the checkpoint was written — re-derive it "
-                "(write_actions_checkpoint) or pass actions_path=None"
-            )
-    acts = spark.read.parquet(actions_path)
-    files = acts.select("file").distinct()
-    prunable = [
-        k
-        for k in keys
-        if isinstance(updates.schema[k].dataType, _INTEGRAL_TYPES)
-    ]
-    disjoint = F.lit(False)
-    for k in prunable:
-        pk = _physical_name(table, k, read_v)
-        lo_b, hi_b = b[f"__lo_{k}"], b[f"__hi_{k}"]
-        disjoint = disjoint | (
-            (F.col("col") == pk)
-            & ((F.col("hi") < F.lit(lo_b)) | (F.col("lo") > F.lit(hi_b)))
-        )
-    # survivors as ONE aggregation over the checkpoint: a file is
-    # pruned iff SOME of its stat rows proves a disjoint range —
-    # max(disjoint) per file (the existence rows' NULLs are ignored
-    # by max; an all-NULL file — no stats — stays a candidate). The
-    # previous files.distinct ∖ clean.distinct anti-join shape paid
-    # three aggregation exchanges over the same scan.
-    survivors_df = (
-        acts.groupBy("file")
-        .agg(F.max(disjoint).alias("__pruned"))
-        .filter(~F.coalesce(F.col("__pruned"), F.lit(False)))
-        .select("file")
-    )
-    # the survivors count RIDES the candidate collect as an
-    # Observation metric instead of running its own Spark job — the
-    # find phase is one job total (guide §1.2: two scalars, one pass)
-    stats_obs = Observation()
-    survivors_df = survivors_df.observe(
-        stats_obs, F.count(F.lit(1)).alias("n")
-    )
-
-    cand_df = survivors_df
-    if bloom_index is not None:
-        probes = updates.select(_bloom_key_expr(keys).alias("k"))
-        # keep a file if some probe fully hits it, or the index does
-        # not cover it — the same (survivors ∩ hits) ∪ (survivors ∖
-        # indexed) the old semi/anti union computed, now ONE join of
-        # two frames both hash-clustered by file (the groupBy above,
-        # the marks repartition) — exchange-free past their scans
-        cand_df = (
-            survivors_df.join(
-                _bloom_marks_df(spark, bloom_index, probes),
-                "file",
-                "left",
-            )
-            .filter(
-                F.coalesce(F.col("__hit"), F.lit(False))
-                | F.col("__idx").isNull()
-            )
-            .select("file")
-        )
-    rewrite = sorted(r.file for r in cand_df.collect())
-    n_stats = int(stats_obs.get["n"])
-    # carry BY REFERENCE: the anti-join stays a plan, never a driver
-    # list — the commit doesn't enumerate carried files (it removes
-    # only the rewrite set), so nothing ever needs them materialized
-    carry_df = files.join(
-        local_df(spark, [(r,) for r in rewrite], "file string"),
-        "file",
-        "left_anti",
-    )
-    return rewrite, carry_df, n_stats
-
-
-def merge_pruned_composite_df(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    update_cols: list[str],
-    bloom_index: str | None = None,
-    actions_path: str | None = None,
-) -> tuple[int, int, int, int]:
-    """:func:`merge_pruned_composite` with the find phase as a
-    DATAFRAME over the actions checkpoint — the 10⁷-file posture:
-    the driver never loops per-file stats AND never enumerates the
-    carry set (it stays a lazy anti-join; only its COUNT crosses to
-    the driver); driver-held state is the final rewrite list alone
-    (O(candidates), which the merge reads anyway). Same return
-    contract."""
-    b = _updates_key_bounds(updates, keys)
-    read_v = _versions(table)[-1]
-    if all(b[f"__lo_{k}"] is None for k in keys):  # empty updates
-        return read_v, 0, len(live_files(table, read_v)), 0
-    rewrite, carry_df, n_stats = _composite_find_df(
-        spark, table, updates, keys, b, read_v, bloom_index, actions_path
-    )
-    # |carry| by log arithmetic, not a third Spark job: the carry set
-    # is (checkpoint files ∖ rewrite), the checkpoint is exactly the
-    # live set at read_v (version-matched in _composite_find_df), and
-    # rewrite ⊆ that set — so |carry| = |live| − |rewrite|. The
-    # replay list is the same O(files) driver state the version
-    # resolution already walks; the SET still only exists as the
-    # lazy carry_df plan.
-    n_carry = len(live_files(table, read_v)) - len(rewrite)
-    next_v = _merge_rewrite_commit(
-        spark, table, rewrite, updates, keys, update_cols, read_v,
-        "MERGE_PRUNED_COMPOSITE_DF",
-    )
-    return next_v, len(rewrite), n_carry, n_stats
-
-
-def merge_pruned_composite_auto(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    update_cols: list[str],
-    bloom_index: str | None = None,
-    df_min_files: int = 256,
-) -> tuple[int, int, int, int]:
-    """Converge the two composite-merge planners BY TABLE SIZE (the
-    ``build_bloom_index_auto`` pattern, VERDICT r10 remedy): at or
-    under ``df_min_files`` live files the driver-loop find phase is
-    cheapest (the r11 bench legs measured the DataFrame planner's
-    extra Spark jobs at ~0.5 s of pure overhead at toy file counts);
-    past it the DataFrame planner over the actions checkpoint keeps
-    candidate selection executor-side — the 10⁷-file posture. Both
-    planners are equivalence-asserted elsewhere
-    (e2_tx_df_planned_merge), so dispatch can never change answers,
-    only cost."""
-    n = len(live_files(table))
-    if n <= df_min_files:
-        return merge_pruned_composite(
-            spark, table, updates, keys, update_cols,
-            bloom_index=bloom_index,
-        )
-    return merge_pruned_composite_df(
-        spark, table, updates, keys, update_cols,
-        bloom_index=bloom_index,
-    )
 
 
 def merge_with_constraints(
@@ -3164,83 +2831,6 @@ BLOOM_FILE_BITS = 16_384  # m per file: 512 x 32-bit words
 BLOOM_FILE_K = 4  # seeded hashes per key
 
 
-def _bloom_positions_py(value) -> list[int]:
-    """Driver-side twin of the executor hash family (md5 first 15 hex
-    chars — ``functions.text.hash64``): the probe's bit positions."""
-    import hashlib
-
-    return [
-        int(
-            hashlib.md5(f"fbloom{j}|{value}".encode()).hexdigest()[:15],
-            16,
-        )
-        % BLOOM_FILE_BITS
-        for j in range(BLOOM_FILE_K)
-    ]
-
-
-def build_bloom_index(
-    spark: SparkSession, table: str, col: str, version: int | None = None
-) -> str:
-    """PER-FILE BLOOM INDEX — the file-skipping structure for point
-    lookups on HIGH-CARDINALITY keys, where min/max stats are useless
-    (a hash-distributed write gives every file the full key range, so
-    range pruning keeps everything; Delta's bloom filter index and
-    Iceberg's bloom write the same sidecar). One distributed pass over
-    the snapshot builds a 16384-bit / 4-hash filter per live file
-    (explode key positions, ``bit_or`` per (file, word) — map-side
-    combined), and the driver stores O(files x 512 words) as a sparse
-    JSON sidecar under ``_bloom/``, atomically renamed and keyed by
-    version. Rows deleted by deletion vectors stay IN a file's filter
-    — that only adds false positives, never false negatives, so
-    pruning stays sound.
-
-    Scale: build cost is one scan of the indexed column (runs with
-    the write in production); sidecar size is ~4 KB/file metadata; no
-    shuffle wider than (files x 512) cells.
-    """
-    versions = _versions(table)
-    if version is None:
-        version = versions[-1]
-    rels = live_files(table, version)
-    from bow_hunter_pipeline_spark.functions.text import hash64
-
-    paths = [os.path.join(table, r) for r in rels]
-    df = spark.read.parquet(*paths).select(
-        F.col(col).alias("k"), _norm_file_path().alias("fp")
-    )
-    positions = F.array(
-        *[
-            hash64(F.concat(F.lit(f"fbloom{j}|"), F.col("k").cast("string")))
-            % F.lit(BLOOM_FILE_BITS)
-            for j in range(BLOOM_FILE_K)
-        ]
-    )
-    words = (
-        df.select("fp", F.explode(positions).alias("p"))
-        .groupBy("fp", F.expr("p div 32").alias("w"))
-        .agg(
-            F.bit_or(
-                F.expr("shiftleft(cast(1 as bigint), cast(p % 32 as int))")
-            ).alias("bits")
-        )
-        .collect()
-    )
-    abs_to_rel = {os.path.abspath(os.path.join(table, r)): r for r in rels}
-    files: dict[str, dict[str, int]] = {r: {} for r in rels}
-    for row in words:
-        rel = abs_to_rel[os.path.abspath(row.fp)]
-        files[rel][str(row.w)] = int(row.bits)
-    out_dir = os.path.join(table, _BLOOM_DIR)
-    os.makedirs(out_dir, exist_ok=True)
-    final = os.path.join(out_dir, f"{col}-v{version:08d}.json")
-    tmp = final + f".{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump({"col": col, "version": version, "files": files}, f)
-    os.replace(tmp, final)
-    return final
-
-
 def _bloom_key_expr(cols: list[str]) -> "F.Column":
     """The indexed key rendered as ONE string — unit-separator-joined
     casts, so a composite key hashes as a single value and the build
@@ -3535,26 +3125,6 @@ def append_indexed(
     return v, scanned
 
 
-def build_bloom_index_auto(
-    spark: SparkSession,
-    table: str,
-    col: str | list[str],
-    version: int | None = None,
-    bits: int = BLOOM_FILE_BITS,
-    json_max_files: int = 256,
-) -> str:
-    """Converge the two sidecar formats by TABLE SIZE: at or under
-    ``json_max_files`` live files the driver-held JSON sidecar
-    (:func:`build_bloom_index`) is cheapest; past it the parquet
-    table (:func:`build_bloom_index_table`) keeps bitmap words off
-    the driver. Both return a path :func:`bloom_point_lookup`
-    dispatches on."""
-    n = len(live_files(table, version))
-    if n <= json_max_files and isinstance(col, str):
-        return build_bloom_index(spark, table, col, version)
-    return build_bloom_index_table(spark, table, col, version, bits)
-
-
 def build_bloom_index_table(
     spark: SparkSession,
     table: str,
@@ -3562,17 +3132,23 @@ def build_bloom_index_table(
     version: int | None = None,
     bits: int = BLOOM_FILE_BITS,
 ) -> str:
-    """:func:`build_bloom_index`'s AT-SCALE twin: the same per-file
-    16384-bit/4-hash filters, stored as a PARQUET SIDECAR keyed by
-    ``(file, w, bits)`` instead of driver-held JSON. The JSON sidecar
-    is O(files × 512 words) in driver memory — fine at thousands of
-    files, driver-GBs at 10⁷; here the words never leave the
-    executors (the build writes the aggregated frame directly) and
-    candidate computation is a broadcast-probe JOIN
-    (:func:`_bloom_candidates_join`), so the driver holds only file
-    NAMES (the same O(files) listing every log replay already holds).
-    Probe-side bit positions are computed with the same executor-side
-    hash exprs as the build — one code path owns the bit layout.
+    """PER-FILE BLOOM INDEX — the file-skipping structure for point
+    lookups on HIGH-CARDINALITY keys, where min/max stats are useless
+    (a hash-distributed write gives every file the full key range, so
+    range pruning keeps everything; Delta's bloom filter index and
+    Iceberg's bloom write the same sidecar). One distributed pass over
+    the snapshot builds a ``bits``-bit / 4-hash filter per live file
+    (explode key positions, ``bit_or`` per (file, word) — map-side
+    combined), stored as a PARQUET SIDECAR ``(file, w, bits)`` under
+    ``_bloom/``, atomically renamed and keyed by version. The words
+    never leave the executors, and candidate computation is a
+    broadcast-probe JOIN (:func:`_bloom_candidates_join`), so the
+    driver holds only file NAMES (the same O(files) listing every log
+    replay already holds). Probe-side bit positions are computed with
+    the same executor-side hash exprs as the build — one code path
+    owns the bit layout. Rows deleted by deletion vectors stay IN a
+    file's filter — that only adds false positives, never false
+    negatives, so pruning stays sound.
 
     ``col`` may be a LIST of columns: the composite key is hashed as
     one unit-separator-joined string (:func:`_bloom_key_expr`), the
@@ -3614,8 +3190,6 @@ def build_bloom_index_table(
 def _bloom_index_bits(index_path: str) -> int:
     """The filter size the sidecar was built with, parsed from its
     ``-m<bits>`` filename tag (pre-tag sidecars used the default)."""
-    import re
-
     m = re.search(r"-m(\d+)\.bloom\.parquet$", index_path)
     return int(m.group(1)) if m else BLOOM_FILE_BITS
 
@@ -3703,13 +3277,9 @@ def _bloom_marks_df(
     spark: SparkSession, index_path: str, probes: DataFrame
 ) -> DataFrame:
     """ONE row per file the index covers: ``__hit`` TRUE when some
-    probe's every distinct position is set in the file's filter, plus
-    a literal ``__idx`` marker (NULL-fills under an outer join, so
-    consumers can tell indexed-but-missed from not-indexed) — the
-    executor-side half of the candidate law ``candidates =
-    (survivors ∩ hits) ∪ (survivors ∖ indexed)``, shared by the
-    list-returning join path and the all-DataFrame find phase
-    (:func:`_composite_find_df`).
+    probe's every distinct position is set in the file's filter — the
+    executor-side half of the candidate law ``candidates = hits ∪
+    (live ∖ indexed)`` that :func:`_bloom_candidates_join_df` applies.
 
     Single-pass shape: the sidecar is hash-clustered by ``file``
     once, the probe positions broadcast onto it as a LEFT join (a
@@ -3748,39 +3318,9 @@ def _bloom_marks_df(
         .groupBy("file", "k", "n_pos")
         .agg(F.count_distinct(F.col("pw"), F.col("pmask")).alias("nhit"))
     )
-    return (
-        per_probe.groupBy("file")
-        .agg(F.max(F.col("nhit") == F.col("n_pos")).alias("__hit"))
-        .withColumn("__idx", F.lit(1))
+    return per_probe.groupBy("file").agg(
+        F.max(F.col("nhit") == F.col("n_pos")).alias("__hit")
     )
-
-
-def _bloom_candidates(
-    table: str, index_path: str, values: list, version: int | None = None
-) -> tuple[list[str], list[str]]:
-    """(candidate rels, all live rels) at ``version`` under the index:
-    a file is a candidate if ANY probe value has all its bits set in
-    the file's filter — or if the file is not in the index at all
-    (appended after the build: unindexed files always scan, so a
-    stale index is merely less effective, never wrong)."""
-    with open(index_path) as f:
-        idx = json.load(f)
-    rels = live_files(table, version)
-    probe_bits = [_bloom_positions_py(v) for v in values]
-
-    def might_contain(rel: str) -> bool:
-        words = idx["files"].get(rel)
-        if words is None:
-            return True
-        return any(
-            all(
-                (words.get(str(p // 32), 0) >> (p % 32)) & 1
-                for p in bits
-            )
-            for bits in probe_bits
-        )
-
-    return [r for r in rels if might_contain(r)], rels
 
 
 def bloom_point_lookup(
@@ -3793,11 +3333,9 @@ def bloom_point_lookup(
 ) -> DataFrame:
     """Point lookup THROUGH the bloom index: open only candidate
     files (no false negatives — a non-candidate provably lacks every
-    probe), then apply the exact predicate. Dispatches on the sidecar
-    format: a ``.json`` index computes candidates driver-side
-    (:func:`_bloom_candidates` — fine for small tables), a parquet
-    index via the broadcast-probe join
-    (:func:`_bloom_candidates_join`).
+    probe), then apply the exact predicate. Candidates come from the
+    parquet sidecar (:func:`build_bloom_index_table`) via the
+    broadcast-probe join (:func:`_bloom_candidates_join`).
 
     Deletion vectors do NOT disable pruning: a row deleted by a DV
     stays in its file's filter, which only ADDS false positives —
@@ -3806,11 +3344,15 @@ def bloom_point_lookup(
     DV-aware (:func:`_read_live`), so vectored rows drop from the
     result while the scan still opens O(candidates) files."""
     if index_path.endswith(".json"):
-        cand, rels = _bloom_candidates(table, index_path, values, version)
-    else:
-        cand, rels = _bloom_candidates_join(
-            spark, table, index_path, values, version
+        # tables indexed before the JSON sidecar was retired still
+        # carry one on disk: refuse it by name instead of misreading it
+        raise ValueError(
+            f"{index_path} is a retired JSON bloom sidecar; rebuild the "
+            "index with build_bloom_index_table"
         )
+    cand, rels = _bloom_candidates_join(
+        spark, table, index_path, values, version
+    )
     read = cand if cand else rels[:1]  # keep schema for empty result
     dvs = _replay_dvs(table, version)
     return _read_live(

@@ -81,3 +81,17 @@ def test_manifest_round_not_stale():
     round rollover that forgets to bump registry.ROUND)."""
     manifest = pf.load_manifest()
     assert manifest["round"] == registry.ROUND
+
+
+def test_manifest_matches_live_after_memos_warm(spark):
+    """The guard is order-independent: running a MinHash (h1) and an
+    IVF (h2) query in-process fills the two expression memos, and the
+    live fingerprints must still equal the manifest."""
+    from bow_hunter_pipeline_spark.plans import dedup, simsearch
+    from tests.conftest import SF_SMOKE
+
+    qs = registry.queries()
+    for name in ("h1_minhash_lsh_pairs", "h2_ivf_topk"):
+        qs[name](spark, SF_SMOKE).collect()
+    assert dedup._MINHASH_EXPRS.exprs and simsearch._CELL_EXPR_CACHE.exprs
+    assert not pf.diff(pf.load_manifest(), _live())

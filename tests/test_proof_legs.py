@@ -1,9 +1,8 @@
 """The in-plan PROOF legs, run with BHPS_PROOF_LEGS=1.
 
-VERDICT r11 ask #4 moved the expensive verification work — the merge
-planner-equivalence replay and the bloom-index full-rebuild
-bit-equality — off the driver/bench path (a production run executes
-one planner and never rebuilds an index it maintains incrementally).
+VERDICT r11 ask #4 moved the expensive verification work — the
+bloom-index full-rebuild bit-equality — off the driver/bench path (a
+production run never rebuilds an index it maintains incrementally).
 These tests are where those laws now live: each plan re-runs with the
 proof flag up, and a violated law raises inside the plan, failing the
 suite exactly as it used to fail the driver row.
@@ -26,14 +25,6 @@ def proof_legs(monkeypatch):
     # driver/bench runs keep the production shape
     monkeypatch.delenv("BHPS_PROOF_LEGS", raising=False)
     assert not legtime.proofs_enabled()
-
-
-def test_df_planned_merge_planner_equivalence(spark, proof_legs):
-    """DataFrame find == driver-loop find (rewrite, carry, stats
-    survivors set-for-set) — asserted inside the plan when the proof
-    flag is up; the query completing IS the proof passing."""
-    rows = pipeline.tx_df_planned_merge(spark, SF_SMOKE).collect()
-    assert rows  # plan ran end-to-end with the equivalence leg live
 
 
 def test_incremental_bloom_full_rebuild_bit_equality(spark, proof_legs):

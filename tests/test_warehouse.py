@@ -1938,14 +1938,16 @@ def test_tx_manifest_export_contract(spark, tmp_path):
 
 
 def test_tx_bloom_index_prunes_without_false_negatives(spark, tmp_path):
-    """Bloom file-skip laws: (1) on a hash-distributed layout the
-    index prunes most files for a single-key probe (min/max stats
-    would keep all of them); (2) no false negatives — for every key
-    in the table, the pruned lookup returns exactly the snapshot
-    filter's rows; (3) files appended after the build are unindexed
-    and therefore always candidates (stale index = conservative, not
-    wrong); (4) with live deletion vectors the lookup reads candidates
-    DV-aware and stays correct (deleted key gone, survivor intact)."""
+    """Bloom file-skip laws of the parquet sidecar: (1) on a
+    hash-distributed layout the index prunes most files for a
+    single-key probe (min/max stats would keep all of them); (2) no
+    false negatives — for every key in the table, the pruned lookup
+    returns exactly the snapshot filter's rows; (3) files appended
+    after the build are unindexed and therefore always candidates
+    (stale index = conservative, not wrong); (4) with live deletion
+    vectors the lookup still PRUNES and reads candidates DV-aware
+    (deleted key gone, survivor intact); (5) a retired JSON sidecar
+    path is refused by name."""
     from pyspark.sql import functions as F
 
     from bow_hunter_pipeline_spark import warehouse_tx as tx
@@ -1955,12 +1957,16 @@ def test_tx_bloom_index_prunes_without_false_negatives(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") % 13).alias("v")
     ).repartition(8)
     tx.create_table(spark, table, df)
-    index = tx.build_bloom_index(spark, table, "k")
+    index = tx.build_bloom_index_table(spark, table, "k")
 
     # (1) pruning: a point probe keeps strictly fewer than all files
-    cand, rels = tx._bloom_candidates(table, index, [1234])
+    cand, rels = tx._bloom_candidates_join(spark, table, index, [1234])
     assert len(rels) == 8
     assert 1 <= len(cand) < 8, f"no pruning: {len(cand)}/8"
+    # misses and repeated probes keep the candidate law
+    for probes in ([-5], [7, 7, 7], [0, 3999]):
+        cand, _ = tx._bloom_candidates_join(spark, table, index, probes)
+        assert len(cand) < 8, probes
 
     # (2) no false negatives, probed across the whole key domain
     for k in range(0, 4000, 397):
@@ -1985,92 +1991,30 @@ def test_tx_bloom_index_prunes_without_false_negatives(spark, tmp_path):
     got = tx.bloom_point_lookup(spark, table, index, "k", [4100]).collect()
     assert [tuple(r) for r in got] == [(4100, 4100 % 13)]
 
-    # (4) DV fallback: delete some rows merge-on-read, lookup stays
-    # DV-aware (deleted key gone, survivor intact)
-    tx.delete_where_dv(spark, table, "k = 777")
-    assert (
-        tx.bloom_point_lookup(spark, table, index, "k", [777]).count() == 0
-    )
-    assert (
-        tx.bloom_point_lookup(spark, table, index, "k", [778]).count() == 1
-    )
-
-
-def test_tx_bloom_table_sidecar_matches_json_and_prunes_with_dvs(
-    spark, tmp_path
-):
-    """The parquet bloom sidecar's laws: (1) the broadcast-probe join
-    computes EXACTLY the candidate set the driver-side JSON path
-    computes (same hash exprs own the bit layout on both build paths);
-    (2) unindexed (post-build) files are always candidates; (3) with
-    live deletion vectors the lookup still PRUNES — the scan opens
-    fewer than all files (the JSON-era fallback read everything) —
-    while staying DV-correct: the deleted key returns nothing, its
-    file-mates survive."""
-    from pyspark.sql import functions as F
-
-    from bow_hunter_pipeline_spark import warehouse_tx as tx
-
-    table = str(tmp_path / "t")
-    df = spark.range(4000).select(
-        F.col("id").alias("k"), (F.col("id") % 13).alias("v")
-    ).repartition(8)
-    tx.create_table(spark, table, df)
-    idx_json = tx.build_bloom_index(spark, table, "k")
-    idx_tab = tx.build_bloom_index_table(spark, table, "k")
-
-    # (1) candidate parity across probe shapes, including misses
-    for probes in ([1234], [0, 3999], [-5], [7, 7, 7], [17, -1]):
-        cand_j, rels_j = tx._bloom_candidates(table, idx_json, probes)
-        cand_t, rels_t = tx._bloom_candidates_join(
-            spark, table, idx_tab, probes
-        )
-        assert rels_j == rels_t
-        assert sorted(cand_j) == sorted(cand_t), probes
-
-    # value parity through the full lookup
-    for k in range(0, 4000, 397):
-        got = sorted(
-            map(
-                tuple,
-                tx.bloom_point_lookup(
-                    spark, table, idx_tab, "k", [k]
-                ).collect(),
-            )
-        )
-        assert got == [(k, k % 13)], k
-
-    # (2) staleness: appended file is always a candidate
-    tx.append(
-        spark,
-        table,
-        spark.range(4000, 4200).select(
-            F.col("id").alias("k"), (F.col("id") % 13).alias("v")
-        ).coalesce(1),
-    )
-    got = tx.bloom_point_lookup(spark, table, idx_tab, "k", [4100])
-    assert [tuple(r) for r in got.collect()] == [(4100, 4100 % 13)]
-
-    # (3) DV-selective pruning: delete one key merge-on-read, then a
+    # (4) DV-selective pruning: delete one key merge-on-read, then a
     # point lookup still opens fewer files than the table holds
     tx.delete_where_dv(spark, table, "k = 777")
-    pruned = tx.bloom_point_lookup(spark, table, idx_tab, "k", [777])
-    n_live = len(tx.live_files(table, None))
+    pruned = tx.bloom_point_lookup(spark, table, index, "k", [777])
+    n_live = len(tx.live_files(table))
     assert n_live == 9
     assert 0 < len(pruned.inputFiles()) < n_live, pruned.inputFiles()
     assert pruned.count() == 0  # DV applied on the candidate read
     assert (
-        tx.bloom_point_lookup(spark, table, idx_tab, "k", [778]).count()
-        == 1
+        tx.bloom_point_lookup(spark, table, index, "k", [778]).count() == 1
     )
+
+    # (5) JSON sidecars are no longer read
+    with pytest.raises(ValueError, match="build_bloom_index_table"):
+        tx.bloom_point_lookup(
+            spark, table, str(tmp_path / "k-v00000000.json"), "k", [1]
+        )
 
 
 def test_merge_pruned_composite_stats_and_bloom_stages(spark, tmp_path):
-    """The composite find phase's two stages, isolated: (1) stats —
-    a file whose SECOND key column's range is disjoint from the
-    updates' is carried even though the FIRST column's range overlaps
-    (merge_pruned, keyed on the first column only, would rewrite it);
-    (2) bloom — on a hash-distributed layout where stats keep
+    """merge_pruned's composite-key find phase, its two stages
+    isolated: (1) stats — a file whose SECOND key column's range is
+    disjoint from the updates' is carried even though the FIRST
+    column's range overlaps; (2) bloom — on a hash-distributed layout where stats keep
     everything, the composite-key probe cuts the rewrite set; (3) the
     merged content is the plain upsert either way."""
     from pyspark.sql import functions as F
@@ -2088,10 +2032,7 @@ def test_merge_pruned_composite_stats_and_bloom_stages(spark, tmp_path):
     ups = spark.createDataFrame(
         [(7, 0, 100.0), (55, 1, 100.0)], "k1 bigint, k2 bigint, v double"
     )
-    _, n_rw, n_carry, n_stats = tx.merge_pruned_composite(
-        spark, t1, ups, ["k1", "k2"], ["v"]
-    )
-    assert n_stats == n_rw  # no bloom stage here
+    _, n_rw, n_carry = tx.merge_pruned(spark, t1, ups, ["k1", "k2"], ["v"])
     assert 0 < n_rw < n_rw + n_carry, (n_rw, n_carry)
     got = tx.snapshot(spark, t1)
     assert got.filter("v = 100.0").count() == 2
@@ -2109,10 +2050,12 @@ def test_merge_pruned_composite_stats_and_bloom_stages(spark, tmp_path):
     ups2 = spark.createDataFrame(
         [(5, 5, -1.0)], "k1 bigint, k2 bigint, v double"
     )
-    _, n_rw2, _, n_stats2 = tx.merge_pruned_composite(
+    read_v = tx._versions(t2)[-1]
+    _, _, n_stats2 = tx._merge_find(spark, t2, ups2, ["k1", "k2"], read_v)
+    assert n_stats2 == 8  # every file spans both full ranges
+    _, n_rw2, _ = tx.merge_pruned(
         spark, t2, ups2, ["k1", "k2"], ["v"], bloom_index=idx
     )
-    assert n_stats2 == 8  # every file spans both full ranges
     assert n_rw2 < 8, n_rw2
     got2 = tx.snapshot(spark, t2)
     assert got2.count() == 4000
@@ -2395,193 +2338,16 @@ def test_bloom_parts_land_file_complete(spark, tmp_path):
         assert sentinel_parts[f] == parts, f  # sentinel rides along
 
 
-def test_build_bloom_index_auto_dispatch(spark, tmp_path):
-    """Size-based convergence: small tables get the JSON sidecar,
-    big file counts the parquet table — same lookup answers."""
-    from pyspark.sql import functions as F
-
-    from bow_hunter_pipeline_spark import warehouse_tx as tx
-
-    table = str(tmp_path / "t")
-    df = spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-    ).repartition(4)
-    tx.create_table(spark, table, df)
-    small = tx.build_bloom_index_auto(spark, table, "k")
-    assert small.endswith(".json")
-    big = tx.build_bloom_index_auto(spark, table, "k", json_max_files=2)
-    assert big.endswith(".bloom.parquet")
-    for index in (small, big):
-        got = sorted(map(tuple, tx.bloom_point_lookup(
-            spark, table, index, "k", [123, 999_999]).collect()))
-        assert got == [(123, 123 % 7)]
-
-
-def test_df_find_phase_matches_loop_planner(spark, tmp_path):
-    """Planner equivalence on a clustered layout where stats DO prune
-    (the hash-distributed registry query exercises the bloom-only
-    side): DataFrame find over the actions checkpoint == driver-loop
-    find, with and without the bloom stage."""
-    from pyspark.sql import functions as F
-
-    from bow_hunter_pipeline_spark import warehouse_tx as tx
-
-    table = str(tmp_path / "t")
-    # range-clustered: repartitionByRange gives disjoint per-file key
-    # ranges, so the stats stage prunes most files
-    df = spark.range(4000).select(
-        F.col("id").alias("a"),
-        (F.col("id") % 5).cast("int").alias("g"),
-        (F.col("id") * 2).alias("v"),
-    ).repartitionByRange(8, "a")
-    tx.create_table(spark, table, df, stats_cols=["a", "g"])
-    index = tx.build_bloom_index_table(spark, table, ["a", "g"])
-    keys = ["a", "g"]
-    updates = spark.createDataFrame(
-        [(100, 0, -1), (101, 1, -1), (-5, 0, -7)], "a bigint, g int, v bigint"
-    )
-    b = tx._updates_key_bounds(updates, keys)
-    read_v = tx._versions(table)[-1]
-    rels, logged = tx._replay(table, read_v)
-    for idx in (None, index):
-        lp = tx._composite_find_loop(
-            spark, table, updates, keys, b, rels, logged, read_v, idx
-        )
-        dfp = tx._composite_find_df(
-            spark, table, updates, keys, b, read_v, idx
-        )
-        assert set(dfp[0]) == set(lp[0])
-        # carry comes back by reference (lazy plan), not a driver list
-        assert {r.file for r in dfp[1].collect()} == set(lp[1])
-        assert dfp[2] == lp[2]
-    # the stats stage genuinely pruned (clustered layout)
-    assert lp[2] < len(rels)
-
-    # the DF-planned merge commits the same result as plain upsert math
-    v, n_rw, n_carry, n_stats = tx.merge_pruned_composite_df(
-        spark, table, updates, keys, ["v"], bloom_index=index
-    )
-    assert n_rw + n_carry == len(rels)
-    snap = tx.snapshot(spark, table, v)
-    assert snap.filter("v = -1").count() == 2   # matched updates
-    assert snap.filter("a = -5").count() == 1   # insert leg
-    assert snap.count() == 4001
-
-    # empty updates: no-op contract
-    empty = updates.limit(0)
-    v2, n_rw2, _, n_s2 = tx.merge_pruned_composite_df(
-        spark, table, empty, keys, ["v"], bloom_index=index
-    )
-    assert (v2, n_rw2, n_s2) == (v, 0, 0)
-
-
-def test_merge_pruned_composite_auto_dispatch(spark, tmp_path):
-    """Size-gated planner dispatch (the build_bloom_index_auto
-    pattern): small tables take the driver loop, large ones the
-    DataFrame find phase — same committed result either way."""
-    from pyspark.sql import functions as F
-
-    from bow_hunter_pipeline_spark import warehouse_tx as tx
-
-    for gate, name in ((10_000, "loop"), (0, "df")):
-        table = str(tmp_path / name)
-        df = spark.range(1000).select(
-            F.col("id").alias("a"), (F.col("id") * 2).alias("v")
-        ).repartitionByRange(4, "a")
-        tx.create_table(spark, table, df, stats_cols=["a"])
-        updates = spark.createDataFrame(
-            [(5, -1), (-9, -9)], "a bigint, v bigint"
-        )
-        v, n_rw, n_carry, n_stats = tx.merge_pruned_composite_auto(
-            spark, table, updates, ["a"], ["v"], df_min_files=gate
-        )
-        assert n_rw + n_carry == 4
-        snap = tx.snapshot(spark, table, v)
-        assert snap.filter("v = -1").count() == 1
-        assert snap.filter("a = -9").count() == 1
-        assert snap.count() == 1001
-
-
-def test_df_find_phase_at_ten_thousand_files(spark, tmp_path):
-    """The 10⁷-file posture at a testable 10⁴: the DataFrame planner
-    runs against a SYNTHETIC actions checkpoint describing 10,000
-    range-clustered files. Driver-held state after the find phase is
-    the tiny rewrite list alone — the carry set stays a lazy plan
-    whose count (not names) crosses to the driver."""
-    import os
-
-    from pyspark.sql import DataFrame as SparkDF
-    from pyspark.sql import functions as F
-
-    from bow_hunter_pipeline_spark import warehouse_tx as tx
-
-    # a real (tiny) table supplies the schema/physical-name metadata
-    table = str(tmp_path / "t")
-    df = spark.range(10).select(
-        F.col("id").alias("a"), (F.col("id") * 2).alias("v")
-    )
-    tx.create_table(spark, table, df, stats_cols=["a"])
-    read_v = tx._versions(table)[-1]
-
-    # synthetic checkpoint: 10⁴ files, each covering a disjoint
-    # 1000-wide key range [i*1000, i*1000+999]
-    n_files = 10_000
-    acts = spark.range(n_files).select(
-        F.format_string("part-%05d.parquet", F.col("id")).alias("file"),
-        F.lit("a").alias("col"),
-        (F.col("id") * 1000).alias("lo"),
-        (F.col("id") * 1000 + 999).alias("hi"),
-    )
-    acts = acts.unionByName(
-        acts.select(
-            "file",
-            F.lit(None).cast("string").alias("col"),
-            F.lit(None).cast("bigint").alias("lo"),
-            F.lit(None).cast("bigint").alias("hi"),
-        )
-    )
-    ck = str(tmp_path / f"actions-v{read_v:08d}.parquet")
-    acts.write.parquet(ck)
-
-    updates = spark.createDataFrame(
-        [(1_500, -1), (7_654_321, -1)], "a bigint, v bigint"
-    )
-    b = tx._updates_key_bounds(updates, ["a"])
-    rewrite, carry_df, n_stats = tx._composite_find_df(
-        spark, table, updates, ["a"], b, read_v, None, actions_path=ck
-    )
-    # stats pruning: only files whose range intersects [1500, 7654321]
-    assert n_stats == 7654 - 1 + 1  # files 1..7654
-    assert rewrite == sorted(
-        f"part-{i:05d}.parquet" for i in range(1, 7655)
-    )
-    assert isinstance(carry_df, SparkDF)  # by reference, never a list
-    assert carry_df.count() == n_files - len(rewrite)
-
-    # a stale checkpoint (older version embedded in the name) is
-    # REFUSED: it would silently miss files added after it was written
-    stale = str(tmp_path / f"actions-v{read_v - 1:08d}.parquet")
-    acts.write.parquet(stale)
-    try:
-        tx._composite_find_df(
-            spark, table, updates, ["a"], b, read_v, None,
-            actions_path=stale,
-        )
-        raise AssertionError("stale checkpoint accepted")
-    except RuntimeError as e:
-        assert "advanced" in str(e)
-
-
-def test_df_find_phase_equivalent_on_legacy_stat_less_table(
+def test_merge_find_footer_fallback_on_legacy_stat_less_table(
     spark, tmp_path
 ):
-    """ADVICE r10: commits logged WITHOUT stats (legacy format) made
-    the two planners diverge — the loop planner falls back to a
-    per-file footer read while the DF planner kept every file a
-    candidate. write_actions_checkpoint now folds the same footer
-    stats into the checkpoint for stat-less files, so the planners
-    are equivalent on legacy tables too (narrow update bounds MUST
-    prune on both sides)."""
+    """ADVICE r10: commits logged WITHOUT stats (legacy format) still
+    prune — the find phase falls back to a per-file footer read, so
+    narrow update bounds on a range-clustered layout rewrite exactly
+    the file(s) whose key range holds the update and carry the rest."""
+    import os
+
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from bow_hunter_pipeline_spark import warehouse_tx as tx
@@ -2596,20 +2362,92 @@ def test_df_find_phase_equivalent_on_legacy_stat_less_table(
     rels, logged = tx._replay(table, read_v)
     assert not any(logged.get(r) for r in rels)  # genuinely stat-less
 
+    # ground truth from the data itself, not from any stats
+    holds = set()
+    for rel in rels:
+        a = pq.read_table(os.path.join(table, rel), columns=["a"])["a"]
+        if len(a) and min(a.to_pylist()) <= 100 <= max(a.to_pylist()):
+            holds.add(rel)
+    assert len(holds) == 1
+
     updates = spark.createDataFrame([(100, -1)], "a bigint, v bigint")
-    b = tx._updates_key_bounds(updates, ["a"])
-    lp_rw, lp_carry, lp_stats = tx._composite_find_loop(
-        spark, table, updates, ["a"], b, rels, logged, read_v, None
+    rewrite, carry, n_stats = tx._merge_find(
+        spark, table, updates, ["a"], read_v
     )
-    df_rw, df_carry, df_stats = tx._composite_find_df(
-        spark, table, updates, ["a"], b, read_v, None
-    )
-    assert set(df_rw) == set(lp_rw)
-    assert {r.file for r in df_carry.collect()} == set(lp_carry)
-    assert df_stats == lp_stats
-    # the footer fold genuinely pruned: narrow bounds on a range-
-    # clustered layout keep only the file(s) covering key 100
-    assert lp_stats < len(rels)
+    assert set(rewrite) == holds
+    assert set(carry) == set(rels) - holds
+    assert n_stats == len(rewrite)
+
+
+def test_merge_pruned_prunes_on_every_integral_key(spark, tmp_path):
+    """Stats pruning intersects EVERY integral merge key, not just the
+    first: a file that overlaps the updates on k1 but is disjoint on
+    k2 cannot hold a matched row, so merge_pruned carries it."""
+    from pyspark.sql import functions as F
+
+    from bow_hunter_pipeline_spark import warehouse_tx as tx
+
+    table = str(tmp_path / "t")
+    # two files, both spanning k1 0..9: one with k2 0..9, one with
+    # k2 100..109
+    df = spark.range(20).select(
+        (F.col("id") % 10).alias("k1"),
+        F.when(F.col("id") < 10, F.col("id") + 100)
+        .otherwise(F.col("id") - 10)
+        .alias("k2"),
+        F.lit(1.0).alias("v"),
+    ).repartitionByRange(2, "k2")
+    tx.create_table(spark, table, df, stats_cols=["k1", "k2"])
+    rels, logged = tx._replay(table)
+    assert len(rels) == 2
+    far = [r for r in rels if logged[r]["k2"][0] >= 100]
+    assert len(far) == 1
+
+    ups = spark.createDataFrame([(5, 5, 9.0)], "k1 bigint, k2 bigint, v double")
+    _, n_rw, n_carry = tx.merge_pruned(spark, table, ups, ["k1", "k2"], ["v"])
+    assert (n_rw, n_carry) == (1, 1)
+    assert far[0] in tx.live_files(table)  # carried, untouched
+    got = tx.snapshot(spark, table)
+    assert got.count() == 20
+    assert got.filter("k1 = 5 AND k2 = 5 AND v = 9.0").count() == 1
+
+
+def test_merge_pruned_reads_column_mapping_once_per_merge(
+    spark, tmp_path, monkeypatch
+):
+    """The find phase resolves physical key names once per merge: the
+    number of _column_mapping calls (each re-reads every log entry)
+    must not grow with the live file count."""
+    from pyspark.sql import functions as F
+
+    from bow_hunter_pipeline_spark import warehouse_tx as tx
+
+    real = tx._column_mapping
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    counts = {}
+    for n_files in (2, 12):
+        table = str(tmp_path / f"t{n_files}")
+        df = spark.range(600).select(
+            F.col("id").alias("a"),
+            (F.col("id") % 3).alias("g"),
+            F.lit(1.0).alias("v"),
+        ).repartitionByRange(n_files, "a")
+        tx.create_table(spark, table, df, stats_cols=["a", "g"])
+        assert len(tx.live_files(table)) == n_files
+        ups = spark.createDataFrame(
+            [(5, 2, 9.0)], "a bigint, g bigint, v double"
+        )
+        monkeypatch.setattr(tx, "_column_mapping", counting)
+        calls.clear()
+        tx.merge_pruned(spark, table, ups, ["a", "g"], ["v"])
+        monkeypatch.setattr(tx, "_column_mapping", real)
+        counts[n_files] = len(calls)
+    assert counts[2] == counts[12], counts
 
 
 def test_partition_spec_evolution_laws(spark, tmp_path):

@@ -1,8 +1,10 @@
 #!/bin/bash
 # Round preflight: every gate the external driver applies, locally.
 # Usage: bash tools/preflight.sh [--sf01]
-set -u
-cd /root/repo
+# pipefail: every gate below pipes through `tail`, which would
+# otherwise mask a failing step's exit status
+set -u -o pipefail
+cd "$(dirname "$0")/.."
 fail=0
 # stale /tmp/bhps_* fixture state from an interrupted run corrupts the
 # next phase (observed r11: phantom value mismatches) — clean between
