@@ -2010,6 +2010,120 @@ def test_tx_bloom_index_prunes_without_false_negatives(spark, tmp_path):
         )
 
 
+def _bloom_candidates_json_reference(spark, table, index_path, values):
+    """Driver-side reference for the sidecar's candidate law, in the
+    JSON sidecar's shape: the parquet words dumped to
+    ``{"files": {rel: {str(w): bits}}}`` and probed in Python with
+    the md5 hash family (first 15 hex chars of ``md5('fbloom<j>|k')``
+    mod the filter size). Unindexed live files are always candidates."""
+    import hashlib
+    import json
+
+    from bow_hunter_pipeline_spark import warehouse_tx as tx
+
+    bits = tx._bloom_index_bits(index_path)
+    files: dict[str, dict[str, int]] = {}
+    for r in spark.read.parquet(index_path).collect():
+        files.setdefault(r.file, {})[str(r.w)] = int(r.bits)
+    idx = json.loads(json.dumps({"files": files}))
+    probe_bits = [
+        [
+            int(hashlib.md5(f"fbloom{j}|{v}".encode()).hexdigest()[:15], 16)
+            % bits
+            for j in range(tx.BLOOM_FILE_K)
+        ]
+        for v in values
+    ]
+
+    def might_contain(rel: str) -> bool:
+        words = idx["files"].get(rel)
+        if words is None:
+            return True
+        return any(
+            all((words.get(str(p // 32), 0) >> (p % 32)) & 1 for p in pb)
+            for pb in probe_bits
+        )
+
+    rels = tx.live_files(table)
+    return [r for r in rels if might_contain(r)], rels
+
+
+def test_tx_bloom_table_sidecar_matches_json_and_prunes_with_dvs(
+    spark, tmp_path
+):
+    """The parquet bloom sidecar's laws: (1) the broadcast-probe join
+    computes EXACTLY the candidate set a driver-side probe of the
+    same words in the JSON sidecar layout computes (the executor hash
+    exprs own the bit layout; the Python md5 twin must agree); (2)
+    unindexed (post-build) files are always candidates on both paths;
+    (3) with live deletion vectors the lookup still PRUNES — the scan
+    opens fewer than all files — while staying DV-correct: the
+    deleted key returns nothing, its file-mates survive."""
+    from pyspark.sql import functions as F
+
+    from bow_hunter_pipeline_spark import warehouse_tx as tx
+
+    table = str(tmp_path / "t")
+    df = spark.range(4000).select(
+        F.col("id").alias("k"), (F.col("id") % 13).alias("v")
+    ).repartition(8)
+    tx.create_table(spark, table, df)
+    idx_tab = tx.build_bloom_index_table(spark, table, "k")
+
+    # (1) candidate parity across probe shapes, including misses
+    for probes in ([1234], [0, 3999], [-5], [7, 7, 7], [17, -1]):
+        cand_j, rels_j = _bloom_candidates_json_reference(
+            spark, table, idx_tab, probes
+        )
+        cand_t, rels_t = tx._bloom_candidates_join(
+            spark, table, idx_tab, probes
+        )
+        assert rels_j == rels_t
+        assert sorted(cand_j) == sorted(cand_t), probes
+
+    # value parity through the full lookup
+    for k in range(0, 4000, 397):
+        got = sorted(
+            map(
+                tuple,
+                tx.bloom_point_lookup(
+                    spark, table, idx_tab, "k", [k]
+                ).collect(),
+            )
+        )
+        assert got == [(k, k % 13)], k
+
+    # (2) staleness: appended file is always a candidate
+    tx.append(
+        spark,
+        table,
+        spark.range(4000, 4200).select(
+            F.col("id").alias("k"), (F.col("id") % 13).alias("v")
+        ).coalesce(1),
+    )
+    cand_j, rels = _bloom_candidates_json_reference(
+        spark, table, idx_tab, [4100]
+    )
+    cand_t, _ = tx._bloom_candidates_join(spark, table, idx_tab, [4100])
+    assert sorted(cand_j) == sorted(cand_t)
+    assert set(rels) - set(tx.live_files(table, 0)) <= set(cand_t)
+    got = tx.bloom_point_lookup(spark, table, idx_tab, "k", [4100])
+    assert [tuple(r) for r in got.collect()] == [(4100, 4100 % 13)]
+
+    # (3) DV-selective pruning: delete one key merge-on-read, then a
+    # point lookup still opens fewer files than the table holds
+    tx.delete_where_dv(spark, table, "k = 777")
+    pruned = tx.bloom_point_lookup(spark, table, idx_tab, "k", [777])
+    n_live = len(tx.live_files(table))
+    assert n_live == 9
+    assert 0 < len(pruned.inputFiles()) < n_live, pruned.inputFiles()
+    assert pruned.count() == 0  # DV applied on the candidate read
+    assert (
+        tx.bloom_point_lookup(spark, table, idx_tab, "k", [778]).count()
+        == 1
+    )
+
+
 def test_merge_pruned_composite_stats_and_bloom_stages(spark, tmp_path):
     """merge_pruned's composite-key find phase, its two stages
     isolated: (1) stats — a file whose SECOND key column's range is
